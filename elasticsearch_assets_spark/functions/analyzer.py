@@ -78,8 +78,9 @@ def analyze_col(col: Column | str) -> Column:
     """Spark-native analyzer: returns array<string> of tokens.
 
     Stays entirely inside whole-stage codegen (regexp_replace/lower/
-    split/filter are all JVM built-ins) — this is the index-build hot
-    path at 10^12-file scale, so no Python is allowed here.
+    split/filter are all JVM built-ins), for operators that need the
+    token array as a column. The index build does not use it: its pass
+    1 runs the same pipeline as pyarrow kernels (indexing/arrowtf.py).
     """
     c = F.col(col) if isinstance(col, str) else col
     s = F.regexp_replace(c, SPARK_ASCII_RE, " ")

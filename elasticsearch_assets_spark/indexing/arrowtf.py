@@ -1,6 +1,10 @@
-"""Arrow-native analyzer + per-doc tf encoder for the index build.
+"""Arrow-native analyzer + per-doc tf encoder: the one pass-1 kernel of
+every index build path (build_index, build_and_write_index and
+plans.manifest._build_part, which serves resumable builds, refresh,
+ingest, upsert and streaming, all reach it through
+indexing.build.encode_postings).
 
-Pass 1 of ``build_and_write_index`` is CPU-bound in exactly two places
+Pass 1 of the index build is CPU-bound in exactly two places
 (event-log task_sum profile, r7): the JVM regex analyzer (~41 s CPU of a
 ~205 s-CPU 240k build) and the explode + two-phase hash aggregation that
 turns token streams into (term, doc_id, tf) rows (~78 s CPU + a 400 MB
@@ -22,12 +26,14 @@ hand whole Arrow batches to native code):
 
 The output is doc-level (doc_id, <passthrough>, dl, terms[], tfs[]):
 doc-level so the tokenized cache that feeds doc_norms keeps exactly the
-shape build_and_write_index already persisted, with the token POSITIONS
-dropped (postings need tf only) — the cache gets smaller, not bigger.
+shape build_and_write_index already persisted. Builds that keep the
+prox stream also ask for ``positions[]`` (each term's ascending in-doc
+token offsets, aligned with ``terms``); the others never materialize
+them.
 
-The JVM implementation (analyze_col + explode + groupBy) remains in
-build_index as the reference; tests pin multiset equality of the two
-pipelines on unicode/null/empty corpora.
+tests/test_build_paths.py pins every build path's rows, positions
+included, against the pure-Python oracle (analyze_text) on
+unicode/null/empty corpora.
 """
 
 from __future__ import annotations
@@ -59,33 +65,21 @@ def arrow_analyze(col: pa.Array) -> pa.Array:
     return pc.split_pattern_regex(s, pattern=SPLIT_RE)
 
 
-def _encode_batch(batch: pa.RecordBatch, text_col: str) -> pa.RecordBatch:
+def _encode_batch(
+    batch: pa.RecordBatch, text_col: str, positions: bool = False
+) -> pa.RecordBatch:
     import numpy as np
     import pyarrow.compute as pc
 
-    n = batch.num_rows
-    content = batch.column(batch.schema.get_field_index(text_col))
-    toks = arrow_analyze(content)
-
-    # token counts per row (null text -> 0), flat token stream aligned
-    # with them (list_flatten skips null rows, matching fill_null(0))
-    counts = np.asarray(pc.fill_null(pc.list_value_length(toks), 0))
-    flat = pc.list_flatten(toks)
-    doc_idx = np.repeat(np.arange(n, dtype=np.int64), counts)
-
-    # drop empty tokens (the JVM filter(t != '') step)
-    keep = pc.not_equal(flat, "")
-    keep_np = np.asarray(keep)
-    if len(keep_np):
-        flat = flat.filter(keep)
-        doc_idx = doc_idx[keep_np]
+    n, flat, doc_idx, dl = _flat_tokens(batch, text_col)
 
     # per-(doc, term) tf: dictionary codes + stable integer lexsort +
-    # boundary run-length — all vectorized, no Python per-row work
+    # boundary run-length — all vectorized, no Python per-row work.
+    # The sort is stable, so each (doc, term) run keeps its tokens in
+    # stream order: the run's in-doc offsets ARE its sorted positions.
     if len(doc_idx):
         enc = pc.dictionary_encode(flat)
         codes = np.asarray(enc.indices, dtype=np.int64)
-        dictionary = enc.dictionary
         order = np.lexsort((codes, doc_idx))
         ds = doc_idx[order]
         cs = codes[order]
@@ -94,23 +88,17 @@ def _encode_batch(batch: pa.RecordBatch, text_col: str) -> pa.RecordBatch:
         np.logical_or(ds[1:] != ds[:-1], cs[1:] != cs[:-1], out=boundary[1:])
         starts = np.flatnonzero(boundary)
         tf = np.diff(np.append(starts, len(ds))).astype(np.int32)
-        gdoc = ds[starts]
-        terms_flat = dictionary.take(pa.array(cs[starts]))
-        groups_per_doc = np.bincount(gdoc, minlength=n)
-        dl = np.bincount(doc_idx, minlength=n).astype(np.int32)
+        terms_flat = enc.dictionary.take(pa.array(cs[starts]))
+        groups_per_doc = np.bincount(ds[starts], minlength=n)
     else:
+        order = starts = np.empty(0, dtype=np.int64)
         tf = np.empty(0, dtype=np.int32)
         terms_flat = pa.array([], type=pa.string())
         groups_per_doc = np.zeros(n, dtype=np.int64)
-        dl = np.zeros(n, dtype=np.int32)
 
     offsets = np.zeros(n + 1, dtype=np.int32)
     np.cumsum(groups_per_doc, out=offsets[1:])
     off_arr = pa.array(offsets, type=pa.int32())
-    terms_list = pa.ListArray.from_arrays(off_arr, terms_flat)
-    tfs_list = pa.ListArray.from_arrays(
-        off_arr, pa.array(tf, type=pa.int32())
-    )
 
     cols, names = [], []
     for i, f in enumerate(batch.schema):
@@ -118,18 +106,32 @@ def _encode_batch(batch: pa.RecordBatch, text_col: str) -> pa.RecordBatch:
             continue
         cols.append(batch.column(i))
         names.append(f.name)
-    cols += [pa.array(dl, type=pa.int32()), terms_list, tfs_list]
+    cols += [
+        pa.array(dl.astype(np.int32)),
+        pa.ListArray.from_arrays(off_arr, terms_flat),
+        pa.ListArray.from_arrays(off_arr, pa.array(tf, type=pa.int32())),
+    ]
     names += ["dl", "terms", "tfs"]
+    if positions:
+        doc_off = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(dl, out=doc_off[1:])
+        pos = (np.arange(len(doc_idx)) - doc_off[doc_idx])[order]
+        run_off = np.append(starts, len(pos)).astype(np.int32)
+        pos_lists = pa.ListArray.from_arrays(
+            pa.array(run_off), pa.array(pos.astype(np.int32))
+        )
+        cols.append(pa.ListArray.from_arrays(off_arr, pos_lists))
+        names.append("positions")
     return pa.RecordBatch.from_arrays(cols, names=names)
 
 
-def tf_encoder(text_col: str):
+def tf_encoder(text_col: str, positions: bool = False):
     """mapInArrow function: (passthrough..., <text_col>) batches in,
-    (passthrough..., dl, terms, tfs) batches out."""
+    (passthrough..., dl, terms, tfs[, positions]) batches out."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            yield _encode_batch(batch, text_col)
+            yield _encode_batch(batch, text_col, positions)
 
     return fn
 
@@ -169,34 +171,51 @@ def ensure_scan_parallelism(df, min_bytes: int = 2 << 20):
     return df.repartition(spark_dp)
 
 
-def encode_tf(df, text_col: str = "text", keep: list[str] | None = None):
+def ddl_fields(schema, cols) -> str:
+    """DDL fragment ``name type, ...`` for ``cols`` of a StructType,
+    each name backtick-quoted so any column name (``src-lang``, names
+    with spaces or backticks) survives the DDL parser."""
+    return ", ".join(
+        "`{}` {}".format(c.replace("`", "``"), schema[c].dataType.simpleString())
+        for c in cols
+    )
+
+
+def encode_tf(
+    df,
+    text_col: str = "text",
+    keep: list[str] | None = None,
+    positions: bool = False,
+):
     """DataFrame-level wrapper over ``tf_encoder``: project down to
     ``keep`` + the text column (guide §4.1 — mapInArrow ships every
     column it is given, so select first), run the one-stage Arrow
     analyzer/tf encoder, and return (keep..., dl, terms, tfs) where
     ``terms`` is the doc's DISTINCT tokens and ``tfs`` the aligned
-    term frequencies (sum(tfs) == dl). Token parity with analyze_col /
-    analyze_text is exact (tests/test_build_paths.py); text-consuming
-    operators use this instead of exploding analyze_col when they need
-    token MULTISETS rather than token order (r7: the JVM regex chain
-    measures ~4.5 MB/s/core vs ~30 MB/s/core for these RE2 kernels)."""
+    term frequencies (sum(tfs) == dl). ``positions=True`` appends
+    ``positions array<array<int>>`` aligned with ``terms``: each term's
+    ascending in-doc token offsets. Token parity with analyze_text is
+    exact (tests/test_build_paths.py); text-consuming operators use
+    this instead of exploding analyze_col when they need token
+    MULTISETS rather than token order (r7: the JVM regex chain measures
+    ~4.5 MB/s/core vs ~30 MB/s/core for these RE2 kernels)."""
     from pyspark.sql import functions as F
 
     keep = list(keep or [])
-    reserved = {"dl", "terms", "tfs"}
-    assert not reserved & set(keep), f"keep collides with {reserved}"
+    out = ["dl", "terms", "tfs"] + (["positions"] if positions else [])
+    clash = sorted(set(out) & set(keep))
+    if clash:
+        raise ValueError(f"keep columns {clash} collide with encoder outputs {out}")
     sel = ensure_scan_parallelism(df.select(*keep, F.col(text_col)))
-    schema = "".join(
-        f"{c} {sel.schema[c].dataType.simpleString()}, " for c in keep
-    )
-    return sel.mapInArrow(
-        tf_encoder(text_col),
-        schema + "dl int, terms array<string>, tfs array<int>",
-    )
+    schema = ddl_fields(sel.schema, keep)
+    schema += (", " if schema else "") + "dl int, terms array<string>, tfs array<int>"
+    if positions:
+        schema += ", positions array<array<int>>"
+    return sel.mapInArrow(tf_encoder(text_col, positions), schema)
 
 
 def _flat_tokens(batch: pa.RecordBatch, text_col: str):
-    """Analyzer prelude shared by the window-based encoders: returns
+    """Analyzer prelude shared by every encoder here: returns
     (nrows, flat, doc_idx, counts) — the filtered flat token stream,
     each token's row index, and per-row token counts."""
     import numpy as np
@@ -346,9 +365,8 @@ def encode_gram_stats(df, text_col: str, id_col: str, ns: tuple):
 
     from pyspark.sql import functions as F
 
-    id_type = df.schema[id_col].dataType.simpleString()
     sel = ensure_scan_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    schema = f"{id_col} {id_type}" + "".join(
+    schema = ddl_fields(sel.schema, [id_col]) + "".join(
         f", _tot{n} int, _dist{n} int, _top{n} int" for n in ns
     )
     return sel.mapInArrow(fn, schema)

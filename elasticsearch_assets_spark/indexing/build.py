@@ -23,13 +23,15 @@ Design notes for 10^12-file scale:
   and written with partitionBy(bucket): a query on T terms prunes to
   ≤ T parquet partitions (directory-level pruning + row-group predicate
   pushdown on term).
-- The (term, doc_id) groupBy keys are near-unique per doc so the tf
-  aggregation has no skew; the hot-term skew lives in per-term grouping,
-  which this layout avoids entirely by keeping postings as rows (blocks
-  are packed separately in indexing/blockpack.py with doc_id-range
-  chunking so no single task ever owns a whole hot term).
-- All expressions are JVM built-ins: tokenize/posexplode/groupBy —
-  whole-stage codegen end to end, no Python in the build path.
+- tf is computed per doc, so pass 1 has no skew; the hot-term skew
+  lives in per-term grouping, which this layout avoids entirely by
+  keeping postings as rows (blocks are packed separately in
+  indexing/blockpack.py with doc_id-range chunking so no single task
+  ever owns a whole hot term).
+- Pass 1 (analyzer -> per-(doc, term) tf, positions, dl) is ONE
+  vectorized mapInArrow stage (indexing/arrowtf.py) shared by every
+  build path through doc_base + encode_postings: a doc's tokens never
+  leave their Arrow batch, so tf needs no groupBy and no shuffle.
 
 Reference parity anchors:
 - record-with-_key model: asset/src/elasticsearch_bulk docs; metadata
@@ -47,7 +49,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from elasticsearch_assets_spark.functions.analyzer import analyze_col
+from elasticsearch_assets_spark.indexing.arrowtf import ddl_fields, encode_tf
 
 DEFAULT_BUCKETS = 64
 
@@ -87,11 +89,79 @@ def with_doc_id(
     docs: DataFrame,
     id_cols: tuple[str, ...] = ("repo", "path", "commit"),
     text_col: str = "content",
+    doc_id_col: str | None = None,
 ) -> DataFrame:
-    """Attach stable doc_id + content sha256 (the per-row invariant)."""
-    return docs.withColumn("doc_id", F.xxhash64(*[F.col(c) for c in id_cols])).withColumn(
+    """Attach stable doc_id (bigint) + content sha256 (the per-row
+    invariant). ``doc_id_col``, when given, is used verbatim (cast to
+    bigint, e.g. the testdata ``documents.doc_id``); otherwise
+    doc_id = xxhash64(*id_cols)."""
+    if doc_id_col is not None:
+        doc_id = F.col(doc_id_col).cast("long")
+    else:
+        doc_id = F.xxhash64(*[F.col(c) for c in id_cols])
+    return docs.withColumn("doc_id", doc_id).withColumn(
         "content_sha", F.sha2(F.col(text_col), 256)
     )
+
+
+def doc_base(
+    docs: DataFrame,
+    text_col: str = "content",
+    id_cols: tuple[str, ...] = ("repo", "path", "commit"),
+    doc_id_col: str | None = None,
+) -> DataFrame:
+    """The doc frame every build path encodes: the scan guard, then
+    with_doc_id. The guard exists because the encode stage's
+    parallelism is capped by the input split count (a handful of
+    parquet files would serialize the build); at 100 TB it is a
+    no-op."""
+    spark_dp = docs.sparkSession.sparkContext.defaultParallelism
+    if docs.rdd.getNumPartitions() < spark_dp:
+        docs = docs.repartition(spark_dp)
+    return with_doc_id(docs, id_cols, text_col, doc_id_col)
+
+
+def encode_postings(
+    base: DataFrame,
+    text_col: str,
+    n_buckets: int,
+    carry: tuple[str, ...] = (),
+    keep_positions: bool = False,
+    persist: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """Pass 1 of every build path: the Arrow analyzer + per-doc tf
+    kernel (indexing/arrowtf.py) over ``base`` (a doc_base frame), then
+    one explode into posting rows. Returns (enc, rows):
+
+    - enc: doc-level (doc_id, *carry, dl, terms, tfs[, positions]);
+      persisted MEMORY_AND_DISK when ``persist`` (rows then explode
+      from the cache)
+    - rows: (term, doc_id, tf, dl, bucket), or with ``keep_positions``
+      (term, doc_id, positions, dl, bucket) — tf = size(positions)
+
+    A doc's tokens never leave their Arrow batch, so tf is exact per
+    batch and pass 1 has NO shuffle. dl rides every row (Lucene
+    norms-with-postings). An array-expression RLE (aggregate fold over
+    sort_array) measured ~2x SLOWER than a codegen hash aggregate —
+    do not retry; the win comes from Arrow, not from the fold."""
+    enc = encode_tf(
+        base, text_col, keep=["doc_id", *carry], positions=keep_positions
+    )
+    if persist:
+        from pyspark import StorageLevel
+
+        enc = enc.persist(StorageLevel.MEMORY_AND_DISK)
+    val = "positions" if keep_positions else "tfs"
+    rows = enc.select(
+        "doc_id", "dl", F.explode(F.arrays_zip("terms", val)).alias("_p")
+    ).select(
+        F.col("_p.terms").alias("term"),
+        "doc_id",
+        F.col(f"_p.{val}").alias("positions" if keep_positions else "tf"),
+        "dl",
+        F.pmod(F.xxhash64("_p.terms"), F.lit(n_buckets)).cast("int").alias("bucket"),
+    )
+    return enc, rows
 
 
 def build_index(
@@ -109,86 +179,35 @@ def build_index(
     If ``doc_id_col`` is given, it is used verbatim (e.g. the testdata
     ``documents.doc_id``); otherwise doc_id = xxhash64(*id_cols).
 
-    With cache=True (default) the tf and dl frames are persisted
-    (MEMORY_AND_DISK): postings/terms/doc_norms/stats all derive from
-    them, so without caching every downstream action re-runs the
-    tokenize+explode+groupBy chain (~4x the work). At cluster scale,
-    where tf may exceed cluster memory, persist() spills to local disk
-    per executor — or write postings first and derive the rest from the
-    persisted parquet (write_index reads back what it wrote for exactly
-    this reason when cache=False).
+    With cache=True (default) the tf rows (the prox rows when
+    keep_positions) are persisted (MEMORY_AND_DISK):
+    postings/terms/doc_norms/stats all derive from them, so without
+    caching every downstream action re-runs the encode pass. At cluster
+    scale, where tf may exceed cluster memory, persist() spills to local
+    disk per executor — or write postings first and derive the rest
+    from the persisted parquet (build_and_write_index).
     """
-    # The tokenize+explode map stage parallelism is capped by the input
-    # split count; small/benchmark inputs often arrive as a handful of
-    # parquet files, which would serialize the whole build. At 100 TB
-    # the scan has plenty of splits and this is a no-op.
-    spark_dp = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < spark_dp:
-        docs = docs.repartition(spark_dp)
-
-    if doc_id_col is not None:
-        base = docs.withColumn("doc_id", F.col(doc_id_col).cast("long")).withColumn(
-            "content_sha", F.sha2(F.col(text_col), 256)
-        )
-    else:
-        base = with_doc_id(docs, id_cols, text_col)
-
-    # dl (doc length) computed MAP-SIDE as size(analyzed tokens): it
-    # rides the tf shuffle denormalized into every posting row (Lucene
-    # norms-with-postings) with ZERO extra shuffles — the previous
-    # doc_id-window cost a full second exchange of the tf table.
-    # coalesce(size, 0): size(NULL) is NULL under ANSI Spark 4 — null-
-    # text docs must carry dl=0 so the cached doc_norms path matches
-    # the postings-derived fallback (which na.fill(0)s) exactly
-    toks = base.withColumn("_toks", analyze_col(text_col)).withColumn(
-        "dl", F.coalesce(F.size("_toks"), F.lit(0)).cast("int")
+    base = doc_base(docs, text_col, id_cols, doc_id_col)
+    # with positions, postings derive tf = size(positions) from the
+    # SAME rows, so the encode pass runs once whichever streams are
+    # kept; dl is denormalized into prox rows too, so phrase queries
+    # score from a single positions scan without touching postings.
+    _, rows = encode_postings(
+        base, text_col, n_buckets, keep_positions=keep_positions
     )
-    tokens = toks.select(
-        "doc_id", "dl", F.posexplode("_toks").alias("pos", "term")
-    )
-
-    # ONE token-level groupBy whichever streams are kept (keys are
-    # near-unique per doc → no skew; partial agg handles the Zipf head):
-    # with positions, tf = size(positions) derives map-side from the
-    # SAME aggregation — the former separate count groupBy re-shuffled
-    # every token row a second time (r5: the with-positions build now
-    # shuffles tokens once). dl denormalized into prox rows too: phrase
-    # queries score from a single positions scan without touching the
-    # postings table.
-    positions = None
-    if keep_positions:
-        positions = (
-            tokens.groupBy("term", "doc_id")
-            .agg(
-                F.sort_array(F.collect_list("pos")).alias("positions"),
-                F.first("dl").alias("dl"),
-            )
-            .withColumn(
-                "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-            )
-        )
-    else:
-        tfd = (
-            tokens.groupBy("term", "doc_id")
-            .agg(F.count("*").cast("int").alias("tf"), F.first("dl").alias("dl"))
-            .withColumn(
-                "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-            )
-        )
 
     cached: tuple = ()
     if cache:
         from pyspark import StorageLevel
 
-        if keep_positions:
-            positions = positions.persist(StorageLevel.MEMORY_AND_DISK)
-            cached = (positions,)
-        else:
-            tfd = tfd.persist(StorageLevel.MEMORY_AND_DISK)
-            cached = (tfd,)
+        rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
+        cached = (rows,)
+    positions = None
+    tfd = rows
     if keep_positions:
-        # postings project off the cached prox aggregation — column
-        # pruning drops the arrays for every counts-only consumer
+        positions = rows
+        # postings project off the cached prox rows — column pruning
+        # drops the arrays for every counts-only consumer
         tfd = positions.select(
             "term",
             "doc_id",
@@ -197,8 +216,9 @@ def build_index(
             "bucket",
         )
 
-    # doc_norms from the CACHED tf (not from toks: that would re-run the
-    # analyzer over the whole corpus on every doc_norms action)
+    # doc_norms from the CACHED tf (not from the encoder: that would
+    # re-run the analyzer over the whole corpus on every doc_norms
+    # action); docs with no tokens have no rows and take dl=0
     dl = tfd.groupBy("doc_id").agg(F.first("dl").alias("dl"))
     keep = ["doc_id", "dl", "content_sha", *source_cols]
     doc_norms = base.join(dl, "doc_id", "left").na.fill({"dl": 0}).select(*keep)
@@ -364,67 +384,18 @@ def build_and_write_index(
     the bench path. Returns the same IndexTables as read_index(path).
     """
     spark = docs.sparkSession
-    spark_dp = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < spark_dp:
-        docs = docs.repartition(spark_dp)
-
-    if doc_id_col is not None:
-        base = docs.withColumn("doc_id", F.col(doc_id_col).cast("long")).withColumn(
-            "content_sha", F.sha2(F.col(text_col), 256)
-        )
-    else:
-        base = with_doc_id(docs, id_cols, text_col)
-
-    # ONE shuffle for the whole heavy pass (was two, r7):
-    # - the analyzer AND per-doc tf run inside a single vectorized
-    #   mapInArrow stage (indexing/arrowtf.py — pyarrow RE2 kernels at
-    #   ~6.6x the JVM regex throughput, then dictionary-encode + lexsort
-    #   run-length tf with no Python per-row work). A doc's tokens never
-    #   leave their batch, so per-batch tf is exact and the former
-    #   explode + groupBy(term, doc_id) — partial and final hash
-    #   aggregation plus the ~400 MB shuffle between them — is gone;
-    #   the encoder's combined rows feed the bucket-layout repartition
-    #   directly (guide §2.4 "remove shuffles outright", §4.2).
-    # - dl (doc length) still rides every posting row (Lucene
-    #   norms-with-postings), computed in the same batch pass.
-    # - an array-expression RLE (aggregate fold over sort_array) was
-    #   measured FIRST and LOST ~2x to the hash aggregate: interpreted
-    #   HOF struct-building is slower than codegen partial agg — do not
-    #   retry; the win here comes from Arrow, not from the fold.
-    from elasticsearch_assets_spark.indexing.arrowtf import tf_encoder
-
-    enc_in = base.select(
-        "doc_id", "content_sha", *source_cols, F.col(text_col)
+    base = doc_base(docs, text_col, id_cols, doc_id_col)
+    # ONE shuffle for the whole heavy pass: encode_postings (analyzer +
+    # per-doc tf in a single mapInArrow stage) feeds the bucket-layout
+    # repartition directly
+    enc, tfd = encode_postings(
+        base,
+        text_col,
+        n_buckets,
+        carry=("content_sha", *source_cols),
+        persist=cache_tokens,
     )
-    enc_schema = (
-        "doc_id bigint, content_sha string"
-        + "".join(
-            f", {c} {base.schema[c].dataType.simpleString()}"
-            for c in source_cols
-        )
-        + ", dl int, terms array<string>, tfs array<int>"
-    )
-    enc = enc_in.mapInArrow(tf_encoder(text_col), enc_schema)
-    cached_src = None
-    if cache_tokens:
-        from pyspark import StorageLevel
-
-        cached_src = enc.persist(StorageLevel.MEMORY_AND_DISK)
-        enc = cached_src
-    tfd = (
-        enc.select(
-            "doc_id", "dl", F.explode(F.arrays_zip("terms", "tfs")).alias("_p")
-        )
-        .select(
-            F.col("_p.terms").alias("term"),
-            "doc_id",
-            F.col("_p.tfs").alias("tf"),
-            "dl",
-        )
-        .withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-        )
-    )
+    cached_src = enc if cache_tokens else None
 
     # pass 1 (the only heavy one): postings straight to disk, hot
     # buckets split by the term-sub-hash fanout (see _bucketed_sorted)
@@ -553,9 +524,7 @@ def build_and_write_index(
     # the writer knows every table's schema — passing them to the
     # read-back skips one footer schema-inference job per table (4
     # driver-side jobs of pure fixed cost per build, r7)
-    src_fields = "".join(
-        f", {c} {base.schema[c].dataType.simpleString()}" for c in source_cols
-    )
+    src_fields = ", " + ddl_fields(base.schema, source_cols) if source_cols else ""
     return read_index(
         spark,
         path,

@@ -31,8 +31,11 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from elasticsearch_assets_spark.functions.analyzer import analyze_col
-from elasticsearch_assets_spark.indexing.build import with_doc_id
+from elasticsearch_assets_spark.indexing.build import (
+    doc_base,
+    encode_postings,
+    with_doc_id,
+)
 
 MANIFEST_SCHEMA = (
     "run_id string, partition_id int, input_fingerprint string, "
@@ -64,8 +67,9 @@ def _build_meta_path(path: str) -> str:
 
 
 def read_build_meta(path: str) -> dict:
-    """Build-time settings of a resumable index (currently just
-    keep_positions). Empty dict for pre-meta indexes."""
+    """Build-time settings of a resumable index (keep_positions,
+    n_buckets and, when the caller supplied one, doc_id_col). Empty
+    dict for pre-meta indexes."""
     import json as _json
 
     p = _build_meta_path(path)
@@ -76,16 +80,22 @@ def read_build_meta(path: str) -> dict:
 
 
 def _record_build_meta(
-    path: str, keep_positions: bool, n_buckets: int | None = None
-) -> None:
-    """Persist keep_positions + n_buckets so later refresh/resume/serve
-    runs default to the index's own settings. A conflicting explicit
-    flag raises: a resume that flips keep_positions would leave a MIXED
-    index (some parts with prox dirs, some without) that silently loses
-    phrase recall for the positions-less parts, and a segment built
-    with a different n_buckets would break bucket pruning (query-side
+    path: str,
+    keep_positions: bool,
+    n_buckets: int | None = None,
+    doc_id_col: str | None = None,
+) -> str | None:
+    """Persist keep_positions + n_buckets (+ doc_id_col when given) so
+    later refresh/resume/serve runs default to the index's own
+    settings, and return the index's doc_id_col (the recorded one when
+    the caller passes None). A conflicting explicit flag raises: a
+    resume that flips keep_positions would leave a MIXED index (some
+    parts with prox dirs, some without) that silently loses phrase
+    recall for the positions-less parts; a segment built with a
+    different n_buckets would break bucket pruning (query-side
     pmod(xxhash64(term), B) no longer matches the rows' bucket column —
-    silent recall loss, not an error)."""
+    silent recall loss, not an error); and a different doc_id_col
+    would index the same docs under different ids."""
     import json as _json
 
     meta = read_build_meta(path)
@@ -107,12 +117,20 @@ def _record_build_meta(
             "pruning (query-side term->bucket math must match every "
             "segment) — pass the original value or rebuild"
         )
+    if doc_id_col is not None:
+        if meta.setdefault("doc_id_col", doc_id_col) != doc_id_col:
+            raise ValueError(
+                f"index at {path} was built with doc_id_col="
+                f"{meta['doc_id_col']!r}, not {doc_id_col!r} — pass the "
+                "original column or rebuild"
+            )
     meta["keep_positions"] = keep_positions
     if n_buckets is not None:
         meta["n_buckets"] = n_buckets
     os.makedirs(path, exist_ok=True)
     with open(_build_meta_path(path), "w") as f:
         _json.dump(meta, f)
+    return meta.get("doc_id_col")
 
 
 def _fp_col():
@@ -129,16 +147,10 @@ def _with_parts(
     part_offset: int = 0,
     doc_id_col: str | None = None,
 ) -> DataFrame:
-    """doc_id_col, when given, is used verbatim as the doc id (mirrors
-    build_index's doc_id_col — e.g. the testdata documents.doc_id)
-    instead of xxhash64(*id_cols); content_sha still derives from the
-    text so fingerprints keep detecting content-only edits."""
-    if doc_id_col is not None:
-        base = docs.withColumn("doc_id", F.col(doc_id_col)).withColumn(
-            "content_sha", F.sha2(F.coalesce(F.col(text_col), F.lit("")), 256)
-        )
-    else:
-        base = with_doc_id(docs, id_cols, text_col)
+    """doc_base (the build paths' doc_id + content_sha derivation) plus
+    the part id; content_sha lets fingerprints detect content-only
+    edits."""
+    base = doc_base(docs, text_col, id_cols, doc_id_col)
     return base.withColumn(
         "_part",
         (F.lit(part_offset) + F.pmod(F.xxhash64("doc_id"), F.lit(n_parts))).cast(
@@ -161,31 +173,19 @@ def _build_part(
     """Build one partition's postings (+ optional prox stream) and
     commit its manifest row LAST (the row is the atomic commit point,
     so a crash between data and manifest writes just rebuilds the
-    part). Same single-token-groupBy shape as indexing/build: dl is
-    computed MAP-SIDE as size(analyzed tokens) — the former
-    sum(tf)-over-doc window cost an extra per-part exchange — and with
-    keep_positions the postings derive from the prox aggregation
-    (tf = size(positions)), so tokens shuffle once either way."""
+    part). Pass 1 is indexing.build.encode_postings, the kernel every
+    build path shares: no shuffle, dl computed in the encode batch. With
+    keep_positions the prox rows are written first and the postings
+    derive from their read-back (tf = size(positions)), so the part's
+    text is encoded once either way."""
     spark = base.sparkSession
     t0 = time.time()
     sub = base.where(F.col("_part") == part)
-    toks = sub.withColumn("_toks", analyze_col(text_col)).withColumn(
-        "dl", F.coalesce(F.size("_toks"), F.lit(0)).cast("int")
+    _, rows = encode_postings(
+        sub, text_col, n_buckets, keep_positions=keep_positions
     )
-    tokens = toks.select(
-        "doc_id", "dl", F.posexplode("_toks").alias("pos", "term")
-    )
-    bucket = F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
     if keep_positions:
-        prox = (
-            tokens.groupBy("term", "doc_id")
-            .agg(
-                F.sort_array(F.collect_list("pos")).alias("positions"),
-                F.first("dl").alias("dl"),
-            )
-            .withColumn("bucket", bucket)
-        )
-        prox.write.mode("overwrite").parquet(_pos_part_dir(path, part))
+        rows.write.mode("overwrite").parquet(_pos_part_dir(path, part))
         prox = spark.read.parquet(_pos_part_dir(path, part))
         tfd = prox.select(
             "term",
@@ -195,11 +195,7 @@ def _build_part(
             "bucket",
         )
     else:
-        tfd = (
-            tokens.groupBy("term", "doc_id")
-            .agg(F.count("*").cast("int").alias("tf"), F.first("dl").alias("dl"))
-            .withColumn("bucket", bucket)
-        )
+        tfd = rows
         # a positions-less rebuild of a part previously built WITH
         # positions must not leave a stale prox dir behind
         import shutil
@@ -308,8 +304,8 @@ def build_index_resumable(
     point for both streams.
     """
     spark = docs.sparkSession
+    doc_id_col = _record_build_meta(path, keep_positions, n_buckets, doc_id_col)
     base = _with_parts(docs, id_cols, text_col, n_parts, doc_id_col=doc_id_col)
-    _record_build_meta(path, keep_positions, n_buckets)
     done = _ever_done_ids(spark, path)
     built = 0
     for part in range(n_parts):
@@ -364,8 +360,8 @@ def refresh_index(
             f"(n_parts={n_parts}) — rebuild, or ingest changes as new "
             "segments"
         )
-    _record_build_meta(path, keep_positions, n_buckets)
-    base = _with_parts(docs, id_cols, text_col, n_parts)
+    doc_id_col = _record_build_meta(path, keep_positions, n_buckets)
+    base = _with_parts(docs, id_cols, text_col, n_parts, doc_id_col=doc_id_col)
     fresh = _fresh_fingerprints(base)
     current = manifest_fingerprints(spark, path)
     stale = [
@@ -509,8 +505,11 @@ def verify_fingerprints(
     n_parts: int = 8,
 ) -> bool:
     """Resume-safety check: manifest fingerprints still match the input
-    (detects input drift between the killed run and the resume)."""
-    base = _with_parts(docs, id_cols, text_col, n_parts)
+    (detects input drift between the killed run and the resume). Doc
+    ids derive the way the index's build did (its recorded
+    doc_id_col)."""
+    doc_id_col = read_build_meta(path).get("doc_id_col")
+    base = _with_parts(docs, id_cols, text_col, n_parts, doc_id_col=doc_id_col)
     fresh = _fresh_fingerprints(base)
     return all(
         fresh.get(pid) == fp
@@ -551,7 +550,7 @@ def ingest_segment_batch(
     the postings at query time, so they stay correct as segments land.
     """
     spark = docs.sparkSession
-    _record_build_meta(path, keep_positions, n_buckets)
+    doc_id_col = _record_build_meta(path, keep_positions, n_buckets, doc_id_col)
     lo = batch_id * n_parts
     base = _with_parts(
         docs, id_cols, text_col, n_parts, part_offset=lo, doc_id_col=doc_id_col
@@ -600,10 +599,9 @@ def upsert_segment_batch(
     """
     spark = docs.sparkSession
     lo = batch_id * n_parts
-    if doc_id_col is not None:
-        ids = docs.select(F.col(doc_id_col).alias("doc_id"))
-    else:
-        ids = with_doc_id(docs, id_cols, text_col).select("doc_id")
+    if doc_id_col is None:
+        doc_id_col = read_build_meta(path).get("doc_id_col")
+    ids = with_doc_id(docs, id_cols, text_col, doc_id_col).select("doc_id")
     delete_docs(spark, path, ids, applies_below=lo)
     return ingest_segment_batch(
         docs,

@@ -192,46 +192,122 @@ def test_pack_gen_group_spans_batches():
     assert list(d) == [3, 9, 27]
 
 
-def test_arrow_encoder_matches_jvm_reference(spark, tmp_path):
-    """r7: build_and_write_index runs the analyzer + per-doc tf inside
-    one vectorized mapInArrow stage (indexing/arrowtf.py). Its output
-    must be row-identical to the JVM reference pipeline (build_index:
-    analyze_col + explode + groupBy) on a corpus covering unicode
-    special-casing, null/empty/sep-only text, and repeated terms."""
+UNICODE_ROWS = [
+    (1, "r1", "parseDate base64Url HTTPServer foo_bar/baz.qux"),
+    (2, "r1", "İstanbul STRAßE what café ÇŐDE"),
+    (3, "r2", None),
+    (4, "r2", ""),
+    (5, "r2", "///...___"),
+    (6, "r3", "dup dup dup Dup DUP aA aA bB"),
+    (7, "r3", "x " * 400 + "yZ"),
+]
+
+
+def _oracle(rows):
+    """Pure-Python analyzer oracle: ({(term, doc_id): (tf, dl,
+    positions)}, [dl per doc]) — tf = count, dl = len(tokens),
+    positions = token indexes."""
+    from elasticsearch_assets_spark.functions.analyzer import analyze_text
+
+    out, dls = {}, []
+    for doc_id, _, text in rows:
+        toks = analyze_text(text) if text else []
+        dls.append(len(toks))
+        for term in set(toks):
+            pos = [i for i, t in enumerate(toks) if t == term]
+            out[(term, doc_id)] = (len(pos), len(toks), pos)
+    return out, dls
+
+
+def test_build_paths_match_python_oracle(spark, tmp_path):
+    """Every build entry point runs pass 1 through the one Arrow kernel
+    (indexing.build.encode_postings). Its rows must equal the
+    pure-Python oracle (analyze_text) exactly — (term, doc_id, tf, dl)
+    plus positions where kept — on a corpus covering unicode
+    special-casing, null/empty/sep-only text and repeated terms, with
+    bucket == pmod(xxhash64(term), B)."""
+    from pyspark.sql import functions as F
+
     from elasticsearch_assets_spark.indexing.build import (
         build_and_write_index,
         build_index,
     )
+    from elasticsearch_assets_spark.plans import manifest as M
 
-    rows = [
-        (1, "r1", "parseDate base64Url HTTPServer foo_bar/baz.qux"),
-        (2, "r1", "İstanbul STRAßE what café ÇŐDE"),
-        (3, "r2", None),
-        (4, "r2", ""),
-        (5, "r2", "///...___"),
-        (6, "r3", "dup dup dup Dup DUP aA aA bB"),
-        (7, "r3", "x " * 400 + "yZ"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, lang string, content string")
-
-    ref = build_index(
-        docs, doc_id_col="doc_id", n_buckets=4, keep_positions=False,
-        cache=False, source_cols=("lang",),
+    B = 4
+    docs = spark.createDataFrame(
+        UNICODE_ROWS, "doc_id long, lang string, content string"
     )
-    out = str(tmp_path / "arrow_idx")
-    got = build_and_write_index(
-        docs, out, doc_id_col="doc_id", n_buckets=4, source_cols=("lang",)
-    )
+    want, dls = _oracle(UNICODE_ROWS)
+    want_tf = {k: v[:2] for k, v in want.items()}
+    want_pos = {k: (v[2], v[1]) for k, v in want.items()}
 
-    cols = ["term", "doc_id", "tf", "dl", "bucket"]
-    a, b = ref.postings.select(*cols), got.postings.select(*cols)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    dn = ["doc_id", "dl", "content_sha", "lang"]
-    c, d = ref.doc_norms.select(*dn), got.doc_norms.select(*dn)
-    assert c.exceptAll(d).count() == 0 and d.exceptAll(c).count() == 0
-    t1, t2 = ref.terms, got.terms
-    assert t1.exceptAll(t2).count() == 0 and t2.exceptAll(t1).count() == 0
-    assert got.n_docs == ref.n_docs and got.avg_dl == ref.avg_dl
+    def check(postings, positions=None):
+        assert postings.where(
+            F.col("bucket") != F.pmod(F.xxhash64("term"), F.lit(B))
+        ).count() == 0
+        got = postings.select("term", "doc_id", "tf", "dl").collect()
+        assert len(got) == len(want_tf)
+        assert {(r.term, r.doc_id): (r.tf, r.dl) for r in got} == want_tf
+        if positions is not None:
+            assert positions.where(
+                F.col("bucket") != F.pmod(F.xxhash64("term"), F.lit(B))
+            ).count() == 0
+            got = positions.select("term", "doc_id", "positions", "dl").collect()
+            assert len(got) == len(want_pos)
+            assert {
+                (r.term, r.doc_id): (list(r.positions), r.dl) for r in got
+            } == want_pos
+
+    bi = build_index(
+        docs, doc_id_col="doc_id", n_buckets=B, keep_positions=True,
+        source_cols=("lang",),
+    )
+    try:
+        check(bi.postings, bi.positions)
+        assert bi.n_docs == len(dls) and bi.avg_dl == sum(dls) / len(dls)
+    finally:
+        bi.unpersist()
+
+    bw = build_and_write_index(
+        docs, str(tmp_path / "bw"), doc_id_col="doc_id", n_buckets=B,
+        source_cols=("lang",),
+    )
+    check(bw.postings)
+    assert bw.n_docs == len(dls) and bw.avg_dl == sum(dls) / len(dls)
+
+    seg = str(tmp_path / "seg")
+    M.ingest_segment_batch(
+        docs, seg, batch_id=0, n_parts=2, n_buckets=B, keep_positions=True,
+        doc_id_col="doc_id",
+    )
+    check(
+        M.read_resumable_postings(spark, seg),
+        M.read_resumable_positions(spark, seg),
+    )
+    served = M.serve_resumable_index(spark, seg)
+    assert served.n_docs == len(dls) and served.avg_dl == sum(dls) / len(dls)
+
+
+def test_schema_ddl_quoting_and_keep_collision(spark, tmp_path):
+    """Column names are backtick-quoted in the encoder's DDL schema (a
+    hyphenated source column used to raise ParseException), and a keep
+    column that collides with an encoder output raises ValueError."""
+    from elasticsearch_assets_spark.indexing.arrowtf import encode_tf
+    from elasticsearch_assets_spark.indexing.build import build_and_write_index
+
+    docs = spark.createDataFrame(
+        [(1, "en", "alpha beta"), (2, "de", "beta")],
+        "doc_id long, `src-lang` string, content string",
+    )
+    idx = build_and_write_index(
+        docs, str(tmp_path / "idx"), doc_id_col="doc_id", n_buckets=4,
+        source_cols=("src-lang",),
+    )
+    norms = idx.doc_norms.select("doc_id", "src-lang").collect()
+    assert sorted((r[0], r[1]) for r in norms) == [(1, "en"), (2, "de")]
+    with pytest.raises(ValueError, match="collide"):
+        encode_tf(docs, "content", keep=["dl"])
 
 
 def test_arrow_analyze_fuzz_parity():

@@ -267,15 +267,17 @@ def test_ivf_index_prunes_centroid_directories(spark, sf_dir, tmp_path_factory):
     ]
 
 
-def test_build_is_jvm_only_with_partial_agg(spark, corpus):
-    # the tokenize+tf hot path: no Python eval nodes (pure JVM codegen
-    # operators) and map-side combine (a partial_* aggregate) before the
-    # shuffle; with keep_positions the single token groupBy is the
-    # collect_list prox agg (r5: tf derives from it map-side)
+def test_build_is_one_arrow_stage_without_aggregate(spark, corpus):
+    # the tokenize+tf hot path: no per-row Python eval nodes, and pass 1
+    # is exactly ONE mapInArrow stage (analyzer + per-doc tf/positions)
+    # whose rows reach the postings with no aggregate and no shuffle
+    # above it
     index, _ = corpus
     plan = _plan(index.postings)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "partial_count" in plan or "partial_collect_list" in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "HashAggregate" not in plan, plan
+    assert "Exchange" not in plan[: plan.index("MapInArrow")], plan
 
 
 def test_phrase_positions_scan_semi_join_restricted(disk_index):

@@ -201,6 +201,40 @@ def test_refresh_preserves_positions_by_default(spark, tmp_path):
         M.build_index_resumable(docs2, p, n_parts=4, keep_positions=False)
 
 
+def test_refresh_uses_recorded_doc_id_col(spark, tmp_path):
+    """A resumable index built with doc_id_col records it in
+    build_meta.json: refresh_index and verify_fingerprints on UNCHANGED
+    input rebuild nothing and keep the caller's ids, an edit rebuilds
+    only its part under the caller's ids, and a conflicting doc_id_col
+    raises."""
+    pdf = generate_corpus_pandas(200, seed=5)
+    pdf["my_id"] = range(1000, 1200)
+    docs = spark.createDataFrame(pdf)
+    p = str(tmp_path / "idx")
+    M.build_index_resumable(docs, p, n_parts=4, doc_id_col="my_id")
+
+    def ids():
+        return {
+            r["doc_id"]
+            for r in M.read_resumable_postings(spark, p)
+            .select("doc_id").distinct().collect()
+        }
+
+    before = ids()
+    assert before <= set(range(1000, 1200))
+    assert M.verify_fingerprints(spark, p, docs, n_parts=4)
+    assert M.refresh_index(docs, p, n_parts=4) == []
+    assert ids() == before
+    assert M.read_build_meta(p)["doc_id_col"] == "my_id"
+
+    pdf.loc[0, "content"] = pdf.loc[0, "content"] + " EDITED"
+    stale = M.refresh_index(spark.createDataFrame(pdf), p, n_parts=4)
+    assert len(stale) == 1 and ids() == before
+
+    with pytest.raises(ValueError, match="doc_id_col"):
+        M.build_index_resumable(docs, p, n_parts=4, doc_id_col="other_id")
+
+
 def test_readers_skip_uncommitted_part_dirs(spark, docs, tmp_path):
     """ADVICE r5: a part dir written just before a crash (no manifest
     row) must not leak into read_resumable_postings/positions."""
