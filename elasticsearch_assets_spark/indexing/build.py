@@ -79,6 +79,9 @@ class IndexTables:
     # lazily by query.exec.term_dfs with only the QUERIED terms
     # (bounded there), so it never materializes the full dictionary.
     _df_cache: dict = field(default_factory=dict)
+    # bucket -> number of postings files in that bucket directory, listed
+    # once per handle by query.exec (the single-partition scan bound)
+    _bucket_files: dict | None = None
 
     def unpersist(self) -> None:
         for df in self._cached:

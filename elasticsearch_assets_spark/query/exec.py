@@ -8,19 +8,24 @@ ES tie-break (score desc, doc_id asc).
 Plan shape for `match`, the flagship path:
 
     postings(bucket pruned, term pushed down)
-      -> join broadcast(term df map)          [tiny: |query terms| rows]
-      -> per-row BM25 contribution            [JVM codegen, no shuffle]
-      -> groupBy(doc_id).sum                  [one shuffle, partial agg]
+      -> per-row BM25 contribution            [df as driver literals]
+      -> groupBy(doc_id) conditional sums     [term-sorted fold]
       -> TakeOrderedAndProject(k)             [no global sort]
 
-The only shuffle is the per-doc score combine; candidate set size is
-bounded by Σ df(term), and the bucket partition filter means a 10^12-doc
-index touches only the directories owning the query's terms.
+The dfs come from the driver-side dictionary cache (term_dfs), so the
+plan has no join, and Σdf bounds the candidate rows before planning.
+When they fit one AQE advisory partition (and the touched buckets hold
+few enough files for one task to open) the scan is coalesced to one
+partition: the aggregate and the top-k then need no Exchange and the
+query is ONE job. Otherwise the per-doc combine is the plan's only
+shuffle. The bucket partition filter means a 10^12-doc index
+touches only the directories owning the query's terms.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -66,30 +71,112 @@ def _df_map(index: IndexTables, terms: list[str]) -> DataFrame:
 _DF_CACHE_MAX = 65536
 
 
+def _remember_dfs(index: IndexTables, dfs: dict[str, int]) -> None:
+    """Store looked-up (term -> df) values in the index's dictionary
+    cache (0 = known-absent), clearing it first when it would overflow."""
+    cache = index._df_cache
+    if len(cache) + len(dfs) > _DF_CACHE_MAX:
+        cache.clear()
+    cache.update(dfs)
+
+
 def term_dfs(index: IndexTables, terms: list[str]) -> dict[str, int]:
     """Driver-side df lookup for the query's terms, cached on the index
     (r7: one tiny dictionary job per FIRST sighting of a term instead of
     a broadcast-build job in every query). Returns entries only for
     dictionary-PRESENT terms; absent terms are cached as 0 so repeated
-    queries for them stay job-free."""
+    queries for them stay job-free.
+
+    Thread-safe for concurrent queries on one handle: the result is
+    built from the values THIS call read or fetched, never re-read from
+    the cache, which another thread may clear in between."""
     cache = index._df_cache
-    missing = [t for t in terms if t not in cache]
+    found: dict[str, int] = {}
+    missing = []
+    for t in terms:
+        df = cache.get(t)
+        if df is None:
+            missing.append(t)
+        else:
+            found[t] = df
     if missing:
-        if len(cache) + len(missing) > _DF_CACHE_MAX:
-            cache.clear()
-        for t in missing:
-            cache[t] = 0
+        fetched = dict.fromkeys(missing, 0)
         for r in _df_map(index, missing).collect():
-            cache[r["term"]] = int(r["df"])
-    return {t: cache[t] for t in terms if cache[t] > 0}
+            fetched[r["term"]] = int(r["df"])
+        _remember_dfs(index, fetched)
+        found.update(fetched)
+    return {t: found[t] for t in terms if found[t] > 0}
+
+
+# Width of one candidate row (term, doc_id, tf, dl) for the
+# single-partition bound: 8 B doc_id + 4 B tf + 4 B dl + a short term.
+_CAND_ROW_BYTES = 32
+# Most postings files the single-partition scan opens in its one task.
+# Each file costs a footer read whatever its row count; on a 4-core
+# host (2,000-doc index, 8 files per bucket) one task beat the
+# distributed plan up to 64 files and lost from 96 on.
+_ONE_TASK_MAX_FILES = 64
+
+
+def _bucket_files(index: IndexTables) -> dict[int, int]:
+    """Postings file count per bucket directory, listed once per handle
+    from the scan's input files. Postings that are not read from
+    bucket directories (an in-memory build) count no files."""
+    if index._bucket_files is None:
+        counts: dict[int, int] = {}
+        for f in index.postings.inputFiles():
+            m = re.search(r"/bucket=(\d+)/", f)
+            if m:
+                b = int(m.group(1))
+                counts[b] = counts.get(b, 0) + 1
+        index._bucket_files = counts
+    return index._bucket_files
+
+
+def _scan(index: IndexTables, terms: list[str], n_rows: int) -> DataFrame:
+    """_candidates(index, terms), coalesced to ONE partition when their
+    driver-known row count (Σdf) fits one AQE advisory partition
+    (spark.sql.adaptive.advisoryPartitionSizeInBytes / row width —
+    ~262k rows at the session's 8 MB) and the buckets they touch hold
+    at most _ONE_TASK_MAX_FILES files. SinglePartition satisfies the
+    per-doc groupBy, the n_matched filters and TakeOrderedAndProject,
+    so the query runs as one job with no Exchange — the partition AQE
+    would coalesce the shuffle output to anyway, minus the shuffle-map
+    job. Larger candidate sets keep the distributed plan."""
+    cand = _candidates(index, terms)
+    spark = cand.sparkSession
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    if n_rows > advisory // _CAND_ROW_BYTES:
+        return cand
+    files = _bucket_files(index)
+    buckets = {term_bucket(t, index.n_buckets) for t in terms}
+    if sum(files.get(b, 0) for b in buckets) > _ONE_TASK_MAX_FILES:
+        return cand
+    return cand.coalesce(1)
 
 
 def scored_terms(
-    index: IndexTables, terms: list[str], k1: float = K1, b: float = B
+    index: IndexTables,
+    terms: list[str],
+    k1: float = K1,
+    b: float = B,
+    must_not: list[str] | None = None,
 ) -> DataFrame:
     """Per-doc summed BM25 over the given terms → (doc_id, score,
-    n_matched). Basis for match/should (OR) and must (AND)."""
-    cand = _candidates(index, terms)
+    n_matched, dl). Basis for match/should (OR) and must (AND).
+
+    Up to 32 terms the dfs are driver literals from ONE term_dfs call
+    (over ``terms`` and ``must_not`` together) and the score is a chain
+    of per-term conditional sums in one groupBy(doc_id). Their Σdf
+    bounds the candidate rows; when those fit one advisory partition
+    (and few enough files) the scan is coalesced to one partition
+    (_scan) and the plan has no Exchange. Docs holding a ``must_not``
+    term are dropped inside the same aggregate: the scan covers both
+    term lists, a max(term ∈ must_not) flag marks excluded docs, and
+    n_matched counts scoring rows only. Wider term lists keep the
+    broadcast-df array fold and an anti-join for ``must_not``."""
     # Deterministic float association: contributions are summed in
     # term-sorted order (matches the oracle bit-for-bit; a plain
     # groupBy().sum() sums in shuffle-arrival order and near-ties then
@@ -106,6 +193,7 @@ def scored_terms(
     # sum twice (the >32-term array-fold fallback counts each contrib
     # row once — both paths must agree for ANY input list)
     terms_sorted = sorted(set(terms))
+    excluded = sorted(set(must_not or []))
     if len(terms_sorted) <= 32:
         # dfs as driver-side literals (r7, same trick phrase_query has
         # used since r5): the per-query BroadcastExchange of the tiny
@@ -113,7 +201,7 @@ def scored_terms(
         # is gone; the idf factor constant-folds per term. The ln() and
         # every float op stay JVM-side, so contributions are
         # bit-identical to the joined-df form.
-        dfs = term_dfs(index, terms_sorted)
+        dfs = term_dfs(index, sorted(set(terms_sorted) | set(excluded)))
 
         def _contrib(t):
             return score_contrib_col(
@@ -126,28 +214,39 @@ def scored_terms(
                 b,
             )
 
-        # dictionary-absent terms have no postings rows (the former
-        # dfm join dropped nothing: every postings term has a
-        # dictionary row by construction) — they get no conditional
-        # sum, and skipping their +coalesce(NULL, 0.0) leaves the
-        # running score bit-identical (x + 0.0 == x, IEEE-exact for
-        # the non-negative contributions).
+        # dictionary-absent terms have no postings rows (every postings
+        # term has a dictionary row by construction): they are neither
+        # scanned nor summed, and skipping their +coalesce(NULL, 0.0)
+        # leaves the running score bit-identical (x + 0.0 == x,
+        # IEEE-exact for the non-negative contributions).
         present = [t for t in terms_sorted if t in dfs]
+        excluded = [t for t in excluded if t in dfs]
         if not present:
             return (
-                cand.select("doc_id")
+                _candidates(index, []).select("doc_id")
                 .withColumn("n_matched", F.lit(0).cast("bigint"))
                 .withColumn("dl", F.lit(0).cast("int"))
                 .withColumn("score", F.lit(0.0))
                 .limit(0)
             )
+        # Σdf over the scanned terms bounds the candidate rows (for a
+        # segmented index the pre-tombstone df bounds the live rows)
+        scanned = sorted(set(present) | set(excluded))
+        cand = _scan(index, scanned, sum(dfs[t] for t in scanned))
         aggs = [
             F.sum(F.when(F.col("term") == t, _contrib(t))).alias(f"_c{i}")
             for i, t in enumerate(present)
         ]
+        if excluded:
+            n_matched = F.count(F.when(F.col("term").isin(present), 1))
+            aggs.append(F.max(F.col("term").isin(excluded)).alias("_ex"))
+        else:
+            n_matched = F.count("*")
         g = cand.groupBy("doc_id").agg(
-            *aggs, F.count("*").alias("n_matched"), F.first("dl").alias("dl")
+            *aggs, n_matched.alias("n_matched"), F.first("dl").alias("dl")
         )
+        if excluded:
+            g = g.where(~F.col("_ex") & (F.col("n_matched") > 0)).drop("_ex")
         # Per-doc-absent terms contribute coalesce(NULL, 0.0): x + 0.0
         # == x is IEEE-exact, so the running value is bit-identical to
         # a fold that skips absent terms outright — while keeping the
@@ -165,7 +264,7 @@ def scored_terms(
     # fold an array of per-term contributions — codegen can't absorb a
     # 100-branch conditional-sum chain (see r5 notes).
     dfm = _df_map(index, terms_sorted)
-    contrib = cand.join(F.broadcast(dfm), "term").withColumn(
+    contrib = _candidates(index, terms).join(F.broadcast(dfm), "term").withColumn(
         "contrib",
         score_contrib_col(
             F.col("tf").cast("double"),
@@ -177,7 +276,7 @@ def scored_terms(
             b,
         ),
     )
-    return (
+    out = (
         contrib.groupBy("doc_id")
         .agg(
             F.sort_array(F.collect_list(F.struct("term", "contrib"))).alias("_cs"),
@@ -190,6 +289,12 @@ def scored_terms(
         )
         .drop("_cs")
     )
+    if excluded:
+        # no .distinct(): an anti-join is insensitive to right-side
+        # duplicates
+        ex = _candidates(index, excluded).select("doc_id")
+        out = out.join(ex, "doc_id", "left_anti")
+    return out
 
 
 # "give me every match" k: by repo convention callers pass 2**31 - 1
@@ -272,7 +377,12 @@ def bool_query(
     minimum_should_match: int | str | None = None,
 ) -> DataFrame:
     """ES `bool`: must = intersection (scores sum), should = union
-    (adds score), must_not = anti-join (no score).
+    (adds score), must_not = exclusion (no score).
+
+    must_not folds into the scoring aggregate (scored_terms): one scan
+    of the scoring ∪ must_not terms, one term_dfs call over both lists,
+    and an exclusion flag per doc instead of an anti-join — below the
+    single-partition bound the whole query is one job.
 
     minimum_should_match (int or "N%"): at least that many DISTINCT
     should terms must match. ES default: 1 when there are only should
@@ -286,7 +396,7 @@ def bool_query(
     must_not = sorted(set(must_not or []))
 
     all_scoring = sorted(set(must) | set(should))
-    s = scored_terms(index, all_scoring)
+    s = scored_terms(index, all_scoring, must_not=must_not)
     if must:
         if must == all_scoring:
             # no extra should-terms: n_matched over the scoring set IS
@@ -307,12 +417,6 @@ def bool_query(
                     F.col("n_matched") >= msm
                 )
                 s = s.join(sm.select("doc_id"), "doc_id", "left_semi")
-    if must_not:
-        # no .distinct(): an anti-join is insensitive to right-side
-        # duplicates, so deduping the exclusion set is a pure extra
-        # exchange+aggregate (the join shuffles the same rows either way)
-        ex = _candidates(index, must_not).select("doc_id")
-        s = s.join(ex, "doc_id", "left_anti")
     return top_k(s.select("doc_id", "score"), k)
 
 
@@ -581,19 +685,18 @@ def scored_expansion(index: IndexTables, hits: DataFrame) -> DataFrame:
     bucket-pruned scored_terms; large ones stay distributed: postings
     semi-joined on (bucket, term), df joined from the hits themselves.
     Deterministic: per-doc contributions fold in term-sorted order."""
-    # ONE dictionary job (r7): the threshold probe is the collect
-    # itself, bounded to threshold+1 short terms (see
-    # expanded_candidates)
-    rows = hits.select("term").limit(WILDCARD_COLLECT_THRESHOLD + 1).collect()
-    if not rows:
+    hit_dfs = _collect_hits(hits)
+    if hit_dfs == {}:
         return (
             index.postings.select("doc_id")
             .limit(0)
             .withColumn("score", F.lit(0.0))
             .withColumn("n_matched", F.lit(0).cast("long"))
         )
-    if len(rows) <= WILDCARD_COLLECT_THRESHOLD:
-        return scored_terms(index, sorted(r["term"] for r in rows))
+    if hit_dfs is not None:
+        # the probe's dfs serve scored_terms from the df cache
+        _remember_dfs(index, hit_dfs)
+        return scored_terms(index, sorted(hit_dfs))
     cand = _candidates_semi(index, hits)
     contrib = cand.join(hits.select("term", "df"), "term").withColumn(
         "contrib",
@@ -655,21 +758,36 @@ def _candidates_semi(index: IndexTables, hits: DataFrame) -> DataFrame:
     return index.postings.join(hb, ["bucket", "term"], "left_semi")
 
 
+def _collect_hits(hits: DataFrame) -> dict[str, int] | None:
+    """(term -> df) of a dictionary hit set in ONE job, or None when it
+    holds more than WILDCARD_COLLECT_THRESHOLD terms. The threshold
+    probe IS the collect, bounded to threshold+1 short rows. It is
+    ordered so Spark plans a TakeOrderedAndProject (always one job); a
+    bare limit() plans a CollectLimit, which runs a second job whenever
+    the first partition holds too few rows."""
+    rows = (
+        hits.select("term", "df")
+        .orderBy("term")
+        .limit(WILDCARD_COLLECT_THRESHOLD + 1)
+        .collect()
+    )
+    if len(rows) > WILDCARD_COLLECT_THRESHOLD:
+        return None
+    return {r["term"]: int(r["df"]) for r in rows}
+
+
 def expanded_candidates(index: IndexTables, hits: DataFrame) -> DataFrame:
     """Candidate postings for an expanded multi-term query (wildcard /
-    regexp). Small expansions (the common case) collect and reuse the
-    statically-pruned path; large ones stay fully distributed.
-
-    ONE dictionary job (r7): the threshold probe IS the collect —
-    limit(threshold+1) bounds the driver transfer to ≤129 short terms,
-    and only the > branch leaves the hit set distributed (the former
-    separate count job then re-collect doubled the dictionary scans)."""
-    rows = hits.select("term").limit(WILDCARD_COLLECT_THRESHOLD + 1).collect()
-    if not rows:
+    regexp). Small expansions (the common case) collect their (term,
+    df) in one dictionary job and reuse the statically-pruned scan,
+    which _scan coalesces to one partition when their Σdf and files
+    fit one task; large ones stay fully distributed."""
+    hit_dfs = _collect_hits(hits)
+    if hit_dfs is None:
+        return _candidates_semi(index, hits)
+    if not hit_dfs:
         return index.postings.where(F.lit(False))
-    if len(rows) <= WILDCARD_COLLECT_THRESHOLD:
-        return _candidates(index, [r["term"] for r in rows])
-    return _candidates_semi(index, hits)
+    return _scan(index, sorted(hit_dfs), sum(hit_dfs.values()))
 
 
 def expand_wildcard(index: IndexTables, pattern: str) -> list[str]:

@@ -97,7 +97,28 @@ class QueryPlanner:
 
     # -- AST dispatch ----------------------------------------------------
     def plan(self, node: Node) -> DataFrame:
-        """Evaluate to (doc_id double score)."""
+        """Evaluate to (doc_id double score). The dfs of every text
+        Term/Phrase leaf are looked up first in ONE term_dfs call, so
+        the leaves plan from the df cache instead of issuing one
+        dictionary job each."""
+        if self.index is not None:
+            terms = sorted(set(self._text_leaf_terms(node)))
+            if terms:
+                qx.term_dfs(self.index, terms)
+        return self._plan(node)
+
+    def _text_leaf_terms(self, node: Node):
+        """Analyzed terms of the text Term/Phrase leaves under node."""
+        if isinstance(node, Term) and self._is_text(node.field):
+            yield from analyze_text(node.value)
+        elif isinstance(node, Phrase) and self._is_text(node.field):
+            yield from analyze_text(node.text)
+        for child in getattr(node, "children", ()):
+            yield from self._text_leaf_terms(child)
+        if getattr(node, "child", None) is not None:
+            yield from self._text_leaf_terms(node.child)
+
+    def _plan(self, node: Node) -> DataFrame:
         if isinstance(node, Term):
             return self._term(node)
         if isinstance(node, Phrase):
@@ -113,7 +134,7 @@ class QueryPlanner:
         if isinstance(node, Boost):
             # multiply the child's score; filter-context children keep
             # their constant 1.0 * factor (Lucene boost semantics)
-            child = self.plan(node.child)
+            child = self._plan(node.child)
             return child.select(
                 "doc_id", (F.col("score") * F.lit(node.factor)).alias("score")
             )
@@ -128,7 +149,7 @@ class QueryPlanner:
         if isinstance(node, Must):
             # a lone required clause is just the clause; the modifier
             # only changes semantics inside a combinator (see _combine)
-            return self.plan(node.child)
+            return self._plan(node.child)
         raise TypeError(f"unknown AST node {node!r}")
 
     # -- leaves -----------------------------------------------------------
@@ -249,15 +270,15 @@ class QueryPlanner:
                 # matches docs matching a and excluding b (Lucene parses
                 # the NOT as a top-level exclusion, not a complement
                 # union operand)
-                negatives.append(self.plan(child.child).select("doc_id"))
+                negatives.append(self._plan(child.child).select("doc_id"))
             elif isinstance(child, Must):
                 # Lucene `+clause`: gates matching; the sibling should
                 # clauses become optional score-adders (classic
                 # `+required optional -prohibited` form)
-                positives.append(self.plan(child.child))
+                positives.append(self._plan(child.child))
                 must_flags.append(True)
             else:
-                positives.append(self.plan(child))
+                positives.append(self._plan(child))
                 must_flags.append(False)
 
         if not positives:
@@ -309,7 +330,7 @@ class QueryPlanner:
 
     def _not(self, node: Not) -> DataFrame:
         base = self.attrs.select("doc_id").withColumn("score", F.lit(0.0))
-        ex = self.plan(node.child).select("doc_id")
+        ex = self._plan(node.child).select("doc_id")
         return base.join(ex, "doc_id", "left_anti")
 
     # -- filter-context compilation (the spaces fast path) -----------------

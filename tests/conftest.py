@@ -39,3 +39,15 @@ def corpus(spark):
     index = build_index(sdf, n_buckets=8, source_cols=("repo", "path", "lang"))
     oracle = OracleIndex(docs)
     return index, oracle
+
+
+@pytest.fixture(scope="session")
+def disk_index(spark, corpus, tmp_path_factory):
+    """The corpus index written and read back (plan checks need FileScan
+    nodes; serving reads this form)."""
+    from elasticsearch_assets_spark.indexing.build import read_index, write_index
+
+    index, _ = corpus
+    p = str(tmp_path_factory.mktemp("idx") / "index")
+    write_index(index, p)
+    return read_index(spark, p)

@@ -6,10 +6,12 @@ broadcast, TakeOrderedAndProject. A plan regression here is a silent
 
 from __future__ import annotations
 
+import os
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
-from elasticsearch_assets_spark.indexing.build import build_index, write_index, read_index
 from elasticsearch_assets_spark.query import exec as qx
 
 
@@ -25,15 +27,6 @@ def packed_corpus(spark, corpus):
     return PackedIndex(
         blocks, index.terms, index.n_docs, index.avg_dl, index.n_buckets
     )
-
-
-@pytest.fixture(scope="module")
-def disk_index(spark, corpus, tmp_path_factory):
-    """The on-disk index (plan checks need FileScan nodes)."""
-    index, _ = corpus
-    p = str(tmp_path_factory.mktemp("idx") / "index")
-    write_index(index, p)
-    return read_index(spark, p)
 
 
 def _plan(df) -> str:
@@ -61,13 +54,74 @@ def test_projection_pruning(disk_index):
     assert "content" not in read_schema
 
 
-def test_df_literal_scoring_no_join(disk_index):
-    # r7: for short term lists the (term, df) lookup is a driver-side
+@contextmanager
+def _advisory_bytes(spark, value: str):
+    """Set the AQE advisory partition size (the single-partition
+    bound's numerator) for the block, then restore it."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _no_join(plan: str) -> bool:
+    return "BroadcastHashJoin" not in plan and "SortMergeJoin" not in plan
+
+
+def test_df_literal_scoring_no_join(spark, disk_index):
+    # for short term lists the (term, df) lookup is a driver-side
     # dictionary probe injected as literals — NO join in the scoring
-    # plan (idf constant-folds), and the only exchange is the per-doc
-    # score combine
+    # plan (idf constant-folds). Below the single-partition bound (Σdf
+    # fits one advisory partition) the scan is coalesced to one
+    # partition and the plan has no Exchange at all; above it the only
+    # exchange is the per-doc score combine.
+    q = lambda: qx.match_query(disk_index, "merge batch", k=5)  # noqa: E731
+    small = _plan(q())
+    assert _no_join(small), small
+    assert "Coalesce 1" in small and "Exchange" not in small, small
+    # 64 B / 32 B per candidate row = a 2-row bound
+    assert sum(qx.term_dfs(disk_index, ["batch", "merge"]).values()) > 2
+    with _advisory_bytes(spark, "64b"):
+        big = _plan(q())
+    assert _no_join(big), big
+    assert "Coalesce" not in big, big
+    assert "Exchange hashpartitioning(doc_id" in big, big
+
+
+def test_bool_must_not_folds_into_score_aggregate(spark, disk_index):
+    # must_not is an exclusion flag inside the scoring aggregate, not
+    # an anti-join: one scan of must ∪ must_not, on both sides of the
+    # single-partition bound
+    q = lambda: qx.bool_query(  # noqa: E731
+        disk_index, must=["merge"], must_not=["batch"], k=5
+    )
+    small = _plan(q())
+    assert "LeftAnti" not in small and _no_join(small), small
+    assert "Coalesce 1" in small and "Exchange" not in small, small
+    assert sum(1 for l in small.splitlines() if "FileScan" in l) == 1, small
+    with _advisory_bytes(spark, "64b"):
+        big = _plan(q())
+    assert "LeftAnti" not in big and _no_join(big), big
+    assert "Exchange hashpartitioning(doc_id" in big, big
+
+
+def test_single_partition_scan_file_bound(disk_index, monkeypatch):
+    # the coalesced scan opens every file of the touched buckets in one
+    # task: past _ONE_TASK_MAX_FILES the distributed plan is kept even
+    # when Σdf fits one partition
+    root = disk_index.postings.inputFiles()[0].split("/bucket=")[0]
+    on_disk = sum(
+        f.endswith(".parquet")
+        for _, _, fs in os.walk(root.removeprefix("file:"))
+        for f in fs
+    )
+    assert sum(qx._bucket_files(disk_index).values()) == on_disk > 0
+    monkeypatch.setattr(qx, "_ONE_TASK_MAX_FILES", 0)
     plan = _plan(qx.match_query(disk_index, "merge batch", k=5))
-    assert "BroadcastHashJoin" not in plan and "SortMergeJoin" not in plan, plan
+    assert "Coalesce" not in plan, plan
     assert "Exchange hashpartitioning(doc_id" in plan, plan
 
 
