@@ -79,9 +79,10 @@ class IndexTables:
     # lazily by query.exec.term_dfs with only the QUERIED terms
     # (bounded there), so it never materializes the full dictionary.
     _df_cache: dict = field(default_factory=dict)
-    # bucket -> number of postings files in that bucket directory, listed
-    # once per handle by query.exec (the single-partition scan bound)
-    _bucket_files: dict | None = None
+    # (postings frame, its scan root dirs, bucket -> postings file
+    # count), filled per touched bucket by query.exec for the
+    # single-partition scan bound; rebuilt when postings is replaced
+    _bucket_files: tuple | None = None
 
     def unpersist(self) -> None:
         for df in self._cached:

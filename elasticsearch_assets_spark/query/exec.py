@@ -14,8 +14,8 @@ Plan shape for `match`, the flagship path:
 
 The dfs come from the driver-side dictionary cache (term_dfs), so the
 plan has no join, and Σdf bounds the candidate rows before planning.
-When they fit one AQE advisory partition (and the touched buckets hold
-few enough files for one task to open) the scan is coalesced to one
+When those rows and the touched bucket files are few enough for one
+task (a measured bound, see _scan) the scan is coalesced to one
 partition: the aggregate and the top-k then need no Exchange and the
 query is ONE job. Otherwise the per-doc combine is the plan's only
 shuffle. The bucket partition filter means a 10^12-doc index
@@ -25,7 +25,6 @@ touches only the directories owning the query's terms.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -108,51 +107,74 @@ def term_dfs(index: IndexTables, terms: list[str]) -> dict[str, int]:
     return {t: found[t] for t in terms if found[t] > 0}
 
 
-# Width of one candidate row (term, doc_id, tf, dl) for the
-# single-partition bound: 8 B doc_id + 4 B tf + 4 B dl + a short term.
-_CAND_ROW_BYTES = 32
-# Most postings files the single-partition scan opens in its one task.
-# Each file costs a footer read whatever its row count; on a 4-core
-# host (2,000-doc index, 8 files per bucket) one task beat the
-# distributed plan up to 64 files and lost from 96 on.
-_ONE_TASK_MAX_FILES = 64
+# Bounds of the single-partition scan. Measured on a 4-core host against
+# the distributed plan (100k-doc index, 16 buckets of ~8 postings files;
+# match queries of 2-8 terms, Σdf 4k-400k, 13 alternating runs each):
+# one task was at parity or faster up to 75k-100k candidate rows over
+# at most 47 files, and slower from 125k rows (4-9%) or from ~60 files
+# at any Σdf (8-14%). Both bounds sit below those crossovers. At 64k
+# rows the one task's scan and fold (~0.5 us/row there, ~35 ms) cost
+# about what the saved shuffle-map job costs (30-40 ms): a wider
+# cluster can shrink the distributed plan's scan but not that job, so
+# it gains little below the bounds.
+_ONE_TASK_MAX_ROWS = 65536
+_ONE_TASK_MAX_FILES = 32
 
 
-def _bucket_files(index: IndexTables) -> dict[int, int]:
-    """Postings file count per bucket directory, listed once per handle
-    from the scan's input files. Postings that are not read from
-    bucket directories (an in-memory build) count no files."""
-    if index._bucket_files is None:
-        counts: dict[int, int] = {}
-        for f in index.postings.inputFiles():
-            m = re.search(r"/bucket=(\d+)/", f)
-            if m:
-                b = int(m.group(1))
-                counts[b] = counts.get(b, 0) + 1
-        index._bucket_files = counts
-    return index._bucket_files
+def _postings_roots(postings: DataFrame) -> list[str]:
+    """Root directories of the file scans under ``postings`` (none for
+    postings that are not read from files)."""
+    roots = []
+    leaves = postings._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() == "HadoopFsRelation":
+            paths = rel.location().rootPaths()
+            roots += [paths.apply(j).toUri().getPath() for j in range(paths.size())]
+    return roots
+
+
+def _touched_files(index: IndexTables, buckets: set[int]) -> int:
+    """Postings files in the given bucket directories. The scan roots
+    are read from the postings plan once per postings frame, and a
+    bucket's files are listed the first time a query touches it. Both
+    are cached on the handle together with the frame they came from, so
+    a handle whose postings were replaced lists afresh."""
+    cache = index._bucket_files
+    if cache is None or cache[0] is not index.postings:
+        cache = (index.postings, _postings_roots(index.postings), {})
+        index._bucket_files = cache
+    _, roots, counts = cache
+    for b in buckets:
+        if b not in counts:
+            dirs = [os.path.join(r, f"bucket={b}") for r in roots]
+            counts[b] = sum(
+                not e.name.startswith(("_", "."))
+                for d in dirs
+                if os.path.isdir(d)
+                for e in os.scandir(d)
+            )
+    return sum(counts[b] for b in buckets)
 
 
 def _scan(index: IndexTables, terms: list[str], n_rows: int) -> DataFrame:
     """_candidates(index, terms), coalesced to ONE partition when their
-    driver-known row count (Σdf) fits one AQE advisory partition
-    (spark.sql.adaptive.advisoryPartitionSizeInBytes / row width —
-    ~262k rows at the session's 8 MB) and the buckets they touch hold
-    at most _ONE_TASK_MAX_FILES files. SinglePartition satisfies the
-    per-doc groupBy, the n_matched filters and TakeOrderedAndProject,
-    so the query runs as one job with no Exchange — the partition AQE
-    would coalesce the shuffle output to anyway, minus the shuffle-map
-    job. Larger candidate sets keep the distributed plan."""
+    driver-known row count (Σdf) is at most _ONE_TASK_MAX_ROWS and the
+    buckets they touch hold at most _ONE_TASK_MAX_FILES files.
+    SinglePartition satisfies the per-doc groupBy, the n_matched filters
+    and TakeOrderedAndProject, so the query runs as one job with no
+    Exchange. The price is parallelism: one task runs the whole scan
+    and the per-doc aggregate, which the bounds keep below the cost of
+    the shuffle-map job it saves. Larger candidate sets keep the
+    distributed plan."""
     cand = _candidates(index, terms)
-    spark = cand.sparkSession
-    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    )
-    if n_rows > advisory // _CAND_ROW_BYTES:
+    if n_rows > _ONE_TASK_MAX_ROWS:
         return cand
-    files = _bucket_files(index)
     buckets = {term_bucket(t, index.n_buckets) for t in terms}
-    if sum(files.get(b, 0) for b in buckets) > _ONE_TASK_MAX_FILES:
+    if _touched_files(index, buckets) > _ONE_TASK_MAX_FILES:
         return cand
     return cand.coalesce(1)
 
@@ -170,13 +192,15 @@ def scored_terms(
     Up to 32 terms the dfs are driver literals from ONE term_dfs call
     (over ``terms`` and ``must_not`` together) and the score is a chain
     of per-term conditional sums in one groupBy(doc_id). Their Σdf
-    bounds the candidate rows; when those fit one advisory partition
-    (and few enough files) the scan is coalesced to one partition
-    (_scan) and the plan has no Exchange. Docs holding a ``must_not``
-    term are dropped inside the same aggregate: the scan covers both
-    term lists, a max(term ∈ must_not) flag marks excluded docs, and
-    n_matched counts scoring rows only. Wider term lists keep the
-    broadcast-df array fold and an anti-join for ``must_not``."""
+    bounds the candidate rows; when those and the touched files are few
+    enough for one task the scan is coalesced to one partition (_scan)
+    and the plan has no Exchange. Wider term lists join a broadcast
+    (term, df) frame and fold an array of contributions, distributed.
+
+    On both paths docs holding a ``must_not`` term are dropped inside
+    the same aggregate: the scan covers both term lists, a
+    max(term ∈ must_not) flag marks excluded docs, and only scoring
+    rows add to the score and to n_matched."""
     # Deterministic float association: contributions are summed in
     # term-sorted order (matches the oracle bit-for-bit; a plain
     # groupBy().sum() sums in shuffle-arrival order and near-ties then
@@ -194,6 +218,21 @@ def scored_terms(
     # row once — both paths must agree for ANY input list)
     terms_sorted = sorted(set(terms))
     excluded = sorted(set(must_not or []))
+
+    def _scoring(c):
+        # a must_not term's rows add to neither score nor n_matched
+        return F.when(F.col("term").isin(terms_sorted), c) if excluded else c
+
+    def _drop_excluded(g):
+        # a doc without the flag holds only scoring rows, so its
+        # n_matched is at least 1
+        if not excluded:
+            return g
+        return g.where(~F.col("_ex")).drop("_ex")
+
+    def _flag():
+        return [F.max(F.col("term").isin(excluded)).alias("_ex")] if excluded else []
+
     if len(terms_sorted) <= 32:
         # dfs as driver-side literals (r7, same trick phrase_query has
         # used since r5): the per-query BroadcastExchange of the tiny
@@ -220,6 +259,7 @@ def scored_terms(
         # leaves the running score bit-identical (x + 0.0 == x,
         # IEEE-exact for the non-negative contributions).
         present = [t for t in terms_sorted if t in dfs]
+        # (the helpers above read this narrowed list when called)
         excluded = [t for t in excluded if t in dfs]
         if not present:
             return (
@@ -237,16 +277,14 @@ def scored_terms(
             F.sum(F.when(F.col("term") == t, _contrib(t))).alias(f"_c{i}")
             for i, t in enumerate(present)
         ]
-        if excluded:
-            n_matched = F.count(F.when(F.col("term").isin(present), 1))
-            aggs.append(F.max(F.col("term").isin(excluded)).alias("_ex"))
-        else:
-            n_matched = F.count("*")
-        g = cand.groupBy("doc_id").agg(
-            *aggs, n_matched.alias("n_matched"), F.first("dl").alias("dl")
+        g = _drop_excluded(
+            cand.groupBy("doc_id").agg(
+                *aggs,
+                F.count(_scoring(F.lit(1))).alias("n_matched"),
+                F.first("dl").alias("dl"),
+                *_flag(),
+            )
         )
-        if excluded:
-            g = g.where(~F.col("_ex") & (F.col("n_matched") > 0)).drop("_ex")
         # Per-doc-absent terms contribute coalesce(NULL, 0.0): x + 0.0
         # == x is IEEE-exact, so the running value is bit-identical to
         # a fold that skips absent terms outright — while keeping the
@@ -263,8 +301,9 @@ def scored_terms(
     # >32 terms (wide expansions): broadcast the (term, df) frame and
     # fold an array of per-term contributions — codegen can't absorb a
     # 100-branch conditional-sum chain (see r5 notes).
-    dfm = _df_map(index, terms_sorted)
-    contrib = _candidates(index, terms).join(F.broadcast(dfm), "term").withColumn(
+    scanned = sorted(set(terms_sorted) | set(excluded))
+    dfm = _df_map(index, scanned)
+    contrib = _candidates(index, scanned).join(F.broadcast(dfm), "term").withColumn(
         "contrib",
         score_contrib_col(
             F.col("tf").cast("double"),
@@ -276,25 +315,21 @@ def scored_terms(
             b,
         ),
     )
-    out = (
-        contrib.groupBy("doc_id")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("term", "contrib"))).alias("_cs"),
-            F.count("*").alias("n_matched"),
+    g = _drop_excluded(
+        contrib.groupBy("doc_id").agg(
+            # collect_list skips the NULLs _scoring leaves for must_not rows
+            F.sort_array(
+                F.collect_list(_scoring(F.struct("term", "contrib")))
+            ).alias("_cs"),
+            F.count(_scoring(F.lit(1))).alias("n_matched"),
             F.first("dl").alias("dl"),
+            *_flag(),
         )
-        .withColumn(
-            "score",
-            F.aggregate("_cs", F.lit(0.0), lambda acc, x: acc + x["contrib"]),
-        )
-        .drop("_cs")
     )
-    if excluded:
-        # no .distinct(): an anti-join is insensitive to right-side
-        # duplicates
-        ex = _candidates(index, excluded).select("doc_id")
-        out = out.join(ex, "doc_id", "left_anti")
-    return out
+    return g.withColumn(
+        "score",
+        F.aggregate("_cs", F.lit(0.0), lambda acc, x: acc + x["contrib"]),
+    ).drop("_cs")
 
 
 # "give me every match" k: by repo convention callers pass 2**31 - 1
@@ -758,19 +793,28 @@ def _candidates_semi(index: IndexTables, hits: DataFrame) -> DataFrame:
     return index.postings.join(hb, ["bucket", "term"], "left_semi")
 
 
+# Largest dictionary input (Spark's size estimate for the hit frame)
+# the hit probe reads whole. An ordered probe is always one job but reads
+# every input row; a bare limit() stops after threshold+1 hits, yet runs
+# a retry job whenever the first partition holds fewer. Measured on a
+# 4-core host: on a 0.46 MB dictionary both took 45-90 ms, the ordered
+# one 15-40 ms slower on >128-hit patterns; on a 37 MB one (4M terms)
+# the ordered `*` probe took 0.25 s against 0.05 s.
+_ORDERED_PROBE_MAX_BYTES = 1 << 20
+
+
 def _collect_hits(hits: DataFrame) -> dict[str, int] | None:
-    """(term -> df) of a dictionary hit set in ONE job, or None when it
-    holds more than WILDCARD_COLLECT_THRESHOLD terms. The threshold
-    probe IS the collect, bounded to threshold+1 short rows. It is
-    ordered so Spark plans a TakeOrderedAndProject (always one job); a
-    bare limit() plans a CollectLimit, which runs a second job whenever
-    the first partition holds too few rows."""
-    rows = (
-        hits.select("term", "df")
-        .orderBy("term")
-        .limit(WILDCARD_COLLECT_THRESHOLD + 1)
-        .collect()
-    )
+    """(term -> df) of a dictionary hit set, or None when it holds more
+    than WILDCARD_COLLECT_THRESHOLD terms. The threshold probe IS the
+    collect, bounded to threshold+1 short rows. Over a small dictionary
+    it is ordered, so Spark plans a TakeOrderedAndProject (always one
+    job); over a larger one it is a bare limit() (a CollectLimit), which
+    stops reading once it has enough rows."""
+    probe = hits.select("term", "df")
+    size = probe._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if size <= _ORDERED_PROBE_MAX_BYTES:
+        probe = probe.orderBy("term")
+    rows = probe.limit(WILDCARD_COLLECT_THRESHOLD + 1).collect()
     if len(rows) > WILDCARD_COLLECT_THRESHOLD:
         return None
     return {r["term"]: int(r["df"]) for r in rows}

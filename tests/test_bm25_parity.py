@@ -8,6 +8,7 @@ scores equal to 1e-6.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from elasticsearch_assets_spark.corpus import generate_corpus_pandas
 from elasticsearch_assets_spark.indexing.build import with_doc_id
@@ -51,6 +52,22 @@ def test_bool_parity(corpus):
         must=["return", "self"], should=["parse"], must_not=["uniq_3"], k=20
     )
     _assert_parity(got, exp)
+
+
+def test_bool_must_not_parity_wide(corpus):
+    # more than 32 scoring terms take the array-fold path; must_not
+    # folds into its aggregate as on the literal-df path
+    index, oracle = corpus
+    ranked = [
+        r["term"]
+        for r in index.terms.orderBy(F.desc("df"), "term").limit(80).collect()
+    ]
+    should, must_not = ranked[20:60], [ranked[10], ranked[70]]
+    for must in ([], [ranked[30]]):
+        got = qx.bool_query(index, must=must, should=should, must_not=must_not, k=50)
+        exp = oracle.bool_query(must=must, should=should, must_not=must_not, k=50)
+        assert exp
+        _assert_parity(got, exp)
 
 
 def test_phrase_parity(corpus):

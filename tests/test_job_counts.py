@@ -1,13 +1,14 @@
 """Spark job-count regression tests for the headline query classes.
 
 Job counts do not move with host load, so they pin per-query fixed
-cost where wall time cannot. A query whose candidate rows (Σdf) fit one
-advisory partition runs as ONE job: no shuffle-map job for the per-doc
-combine, and must_not folded into the score aggregate. A cold df cache
+cost where wall time cannot. A query whose candidate rows (Σdf) and
+touched files fit the single-partition bound runs as ONE job: no
+shuffle-map job for the per-doc combine, and must_not folded into the
+score aggregate. A cold df cache
 adds exactly one dictionary job, whatever the number of terms,
 must_not terms or query-string leaves. A wildcard always pays its
-dictionary probe (which also yields the dfs), so it is two jobs
-either way.
+dictionary probe (which also yields the dfs), so it is one job more
+than its scoring plan either way.
 """
 
 from __future__ import annotations
@@ -65,7 +66,10 @@ CASES = [
         1,
         2,
     ),
-    ("wildcard", lambda i, p: qx.wildcard_query(i, "merg*", 10), 2, 2),
+    ("wildcard", lambda i, p: qx.wildcard_query(i, "valu*", 10), 2, 2),
+    # 24 expansions over all 8 buckets (61 files): past the one-task
+    # file bound, so the per-doc combine keeps its shuffle-map job
+    ("wildcard_wide", lambda i, p: qx.wildcard_query(i, "merg*", 10), 3, 3),
     (
         "query_string_lang",
         lambda i, p: _query_string(i, f"(merge OR batch) AND lang:{p[1]}"),
@@ -79,6 +83,24 @@ CASES = [
         3,
     ),
 ]
+
+
+def test_hit_probe_is_one_job_over_a_small_dictionary(
+    spark, disk_index, monkeypatch, tmp_path
+):
+    # a sparse pattern over a dictionary of several files: the ordered
+    # probe reads every file in one job; past _ORDERED_PROBE_MAX_BYTES
+    # the bare limit() retries over more partitions when the first
+    # holds too few hits
+    disk_index.terms.repartition(4).write.parquet(str(tmp_path / "terms"))
+    terms = spark.read.parquet(str(tmp_path / "terms"))
+    hits = qx.dict_hits(dataclasses.replace(disk_index, terms=terms), "merg*")
+    assert hits.rdd.getNumPartitions() > 1
+    got = {}
+    assert _jobs(spark, lambda: got.update(small=qx._collect_hits(hits))) == 1
+    monkeypatch.setattr(qx, "_ORDERED_PROBE_MAX_BYTES", 0)
+    assert _jobs(spark, lambda: got.update(large=qx._collect_hits(hits))) > 1
+    assert got["small"] == got["large"] and got["small"]
 
 
 @pytest.mark.parametrize("name,build,warm,cold", CASES, ids=[c[0] for c in CASES])

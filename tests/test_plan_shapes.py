@@ -6,8 +6,8 @@ broadcast, TakeOrderedAndProject. A plan regression here is a silent
 
 from __future__ import annotations
 
+import dataclasses
 import os
-from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -54,47 +54,33 @@ def test_projection_pruning(disk_index):
     assert "content" not in read_schema
 
 
-@contextmanager
-def _advisory_bytes(spark, value: str):
-    """Set the AQE advisory partition size (the single-partition
-    bound's numerator) for the block, then restore it."""
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    old = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 def _no_join(plan: str) -> bool:
     return "BroadcastHashJoin" not in plan and "SortMergeJoin" not in plan
 
 
-def test_df_literal_scoring_no_join(spark, disk_index):
+def test_df_literal_scoring_no_join(disk_index, monkeypatch):
     # for short term lists the (term, df) lookup is a driver-side
     # dictionary probe injected as literals — NO join in the scoring
     # plan (idf constant-folds). Below the single-partition bound (Σdf
-    # fits one advisory partition) the scan is coalesced to one
-    # partition and the plan has no Exchange at all; above it the only
-    # exchange is the per-doc score combine.
+    # within _ONE_TASK_MAX_ROWS) the scan is coalesced to one partition
+    # and the plan has no Exchange at all; above it the only exchange
+    # is the per-doc score combine.
     q = lambda: qx.match_query(disk_index, "merge batch", k=5)  # noqa: E731
     small = _plan(q())
     assert _no_join(small), small
     assert "Coalesce 1" in small and "Exchange" not in small, small
-    # 64 B / 32 B per candidate row = a 2-row bound
     assert sum(qx.term_dfs(disk_index, ["batch", "merge"]).values()) > 2
-    with _advisory_bytes(spark, "64b"):
-        big = _plan(q())
+    monkeypatch.setattr(qx, "_ONE_TASK_MAX_ROWS", 2)
+    big = _plan(q())
     assert _no_join(big), big
     assert "Coalesce" not in big, big
     assert "Exchange hashpartitioning(doc_id" in big, big
 
 
-def test_bool_must_not_folds_into_score_aggregate(spark, disk_index):
+def test_bool_must_not_folds_into_score_aggregate(disk_index, monkeypatch):
     # must_not is an exclusion flag inside the scoring aggregate, not
     # an anti-join: one scan of must ∪ must_not, on both sides of the
-    # single-partition bound
+    # single-partition bound and on the >32-term array-fold path
     q = lambda: qx.bool_query(  # noqa: E731
         disk_index, must=["merge"], must_not=["batch"], k=5
     )
@@ -102,8 +88,13 @@ def test_bool_must_not_folds_into_score_aggregate(spark, disk_index):
     assert "LeftAnti" not in small and _no_join(small), small
     assert "Coalesce 1" in small and "Exchange" not in small, small
     assert sum(1 for l in small.splitlines() if "FileScan" in l) == 1, small
-    with _advisory_bytes(spark, "64b"):
-        big = _plan(q())
+    wide = sorted(r["term"] for r in disk_index.terms.limit(40).collect())
+    assert len(wide) > 32
+    plan = _plan(qx.bool_query(disk_index, should=wide, must_not=["batch"], k=5))
+    assert "LeftAnti" not in plan, plan
+    assert sum(1 for l in plan.splitlines() if "FileScan" in l and "postings" in l) == 1, plan
+    monkeypatch.setattr(qx, "_ONE_TASK_MAX_ROWS", 2)
+    big = _plan(q())
     assert "LeftAnti" not in big and _no_join(big), big
     assert "Exchange hashpartitioning(doc_id" in big, big
 
@@ -111,18 +102,59 @@ def test_bool_must_not_folds_into_score_aggregate(spark, disk_index):
 def test_single_partition_scan_file_bound(disk_index, monkeypatch):
     # the coalesced scan opens every file of the touched buckets in one
     # task: past _ONE_TASK_MAX_FILES the distributed plan is kept even
-    # when Σdf fits one partition
+    # when Σdf fits. Files are counted per touched bucket directory.
     root = disk_index.postings.inputFiles()[0].split("/bucket=")[0]
-    on_disk = sum(
-        f.endswith(".parquet")
-        for _, _, fs in os.walk(root.removeprefix("file:"))
-        for f in fs
-    )
-    assert sum(qx._bucket_files(disk_index).values()) == on_disk > 0
+    on_disk = {
+        b: sum(
+            f.endswith(".parquet")
+            for f in os.listdir(os.path.join(root.removeprefix("file:"), f"bucket={b}"))
+        )
+        for b in range(disk_index.n_buckets)
+    }
+    assert qx._touched_files(disk_index, {0}) == on_disk[0] > 0
+    assert qx._touched_files(disk_index, set(on_disk)) == sum(on_disk.values())
     monkeypatch.setattr(qx, "_ONE_TASK_MAX_FILES", 0)
     plan = _plan(qx.match_query(disk_index, "merge batch", k=5))
     assert "Coalesce" not in plan, plan
     assert "Exchange hashpartitioning(doc_id" in plan, plan
+
+
+def test_bucket_file_counts_follow_the_postings_frame(disk_index):
+    # a handle whose postings are replaced must not keep the old counts:
+    # in-memory postings have no files
+    index = dataclasses.replace(disk_index, _df_cache={})
+    assert qx._touched_files(index, {0, 1}) > 0
+    mem = dataclasses.replace(index, postings=index.postings.localCheckpoint())
+    assert qx._touched_files(mem, {0, 1}) == 0
+
+
+def test_bucket_file_counts_on_segmented_index(spark, tmp_path):
+    # segment parts each hold their own bucket directories, and the
+    # tombstone anti-join adds a scan that has none
+    import re
+
+    from elasticsearch_assets_spark.corpus import generate_corpus_pandas
+    from elasticsearch_assets_spark.plans import manifest as M
+
+    path = str(tmp_path / "seg")
+    pdf = generate_corpus_pandas(60, seed=3)
+    for i in (0, 1):
+        M.ingest_segment_batch(
+            spark.createDataFrame(pdf.iloc[i * 30 : (i + 1) * 30]),
+            path, batch_id=i, n_parts=2, n_buckets=8,
+        )
+    doc = M.serve_resumable_index(spark, path).postings.first()["doc_id"]
+    assert M.delete_docs(spark, path, [doc]) == 1
+    index = M.serve_resumable_index(spark, path)
+    per_bucket = {}
+    for f in index.postings.inputFiles():
+        m = re.search(r"/bucket=(\d+)/", f)
+        if m:  # the tombstone scan's files have no bucket
+            b = int(m.group(1))
+            per_bucket[b] = per_bucket.get(b, 0) + 1
+    assert len(M.done_parts(spark, path)) > 1
+    for b in range(8):
+        assert qx._touched_files(index, {b}) == per_bucket.get(b, 0)
 
 
 def test_df_map_broadcast_wide_fallback(disk_index):
