@@ -142,7 +142,9 @@ def _touched_files(index: IndexTables, buckets: set[int]) -> int:
     are read from the postings plan once per postings frame, and a
     bucket's files are listed the first time a query touches it. Both
     are cached on the handle together with the frame they came from, so
-    a handle whose postings were replaced lists afresh."""
+    a handle whose postings were replaced lists afresh. Concurrent
+    queries need no lock: each uses the cache tuple it read, and a race
+    only repeats a listing that gives the same count."""
     cache = index._bucket_files
     if cache is None or cache[0] is not index.postings:
         cache = (index.postings, _postings_roots(index.postings), {})
